@@ -3738,7 +3738,8 @@ object SparkEntry {
         |              4) AS quality
         |      FROM t)
         |SELECT source, count(*) AS n_docs,
-        |       round(avg(quality), 4) AS avg_quality,
+        |       CAST((2 * sum(CAST(round(quality * 10000) AS BIGINT)) + count(*))
+        |            // (2 * count(*)) AS DOUBLE) / 10000 AS avg_quality,
         |       round(min(quality), 4) AS min_quality,
         |       round(max(quality), 4) AS max_quality
         |FROM q GROUP BY source ORDER BY source""".stripMargin,

@@ -201,14 +201,24 @@ object TextAnalysis {
 
   /** Per-source quality rollup (corpus triage at scale: one shuffle
     * on the low-cardinality source key, partial aggs map-side).
+    *
+    * The mean of the per-document 4-dp scores comes from an exact
+    * integer sum of basis points, rounded half-up to 4 dp, so it does
+    * not depend on row order: a double `avg` sums in shuffle order,
+    * and a row permutation can move its 4th decimal.
     */
   def qualityBySource(documents: DataFrame): DataFrame =
     qualityScore(documents)
+      .withColumn("q_bp", round(col("quality") * 10000).cast("long"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
-        round(avg("quality"), 4).as("avg_quality"),
+        sum("q_bp").as("sum_bp"),
         round(min("quality"), 4).as("min_quality"),
         round(max("quality"), 4).as("max_quality"))
+      .select(col("source"), col("n_docs"),
+        (expr("(2 * sum_bp + n_docs) div (2 * n_docs)").cast("double") / 10000)
+          .as("avg_quality"),
+        col("min_quality"), col("max_quality"))
 
   /** Corpus vocabulary heavy-hitters via the Misra-Gries typed
     * imperative aggregate ([[graft.functions.FreqItemsAgg]]): only

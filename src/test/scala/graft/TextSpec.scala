@@ -203,6 +203,27 @@ class TextSpec extends SparkSpec {
     assert(got.size === 6)
   }
 
+  test("quality by source: exact mean of the 4-dp scores, identical under row permutations") {
+    val docs = Tables.documents(spark, sf).select("doc_id", "source", "text")
+    def bySource(df: org.apache.spark.sql.DataFrame) =
+      TextAnalysis.qualityBySource(df).orderBy("source").collect().toSeq
+    val base = bySource(docs)
+    val rows = docs.collect().toSeq
+    for (seed <- 1 to 3) {
+      val permuted = spark.createDataFrame(spark.sparkContext.parallelize(
+        new scala.util.Random(seed).shuffle(rows), 2 + seed), docs.schema)
+      assert(bySource(permuted) == base, s"permutation seed $seed")
+    }
+    // the mean is the half-up 4-dp mean of the per-document scores
+    val exact = TextAnalysis.qualityScore(docs).collect().toSeq
+      .groupBy(_.getAs[String]("source")).map { case (src, rs) =>
+        val mean = rs.map(r => BigDecimal(r.getAs[Double]("quality"))).sum / rs.size
+        src -> mean.setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+      }
+    assert(base.map(r => r.getAs[String]("source") ->
+      r.getAs[Double]("avg_quality")).toMap == exact)
+  }
+
   test("quality drift: a template flood drifts, peers stay calm, " +
       "single source is NULL") {
     import spark.implicits._
